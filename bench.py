@@ -230,23 +230,8 @@ def main() -> None:
     except (OSError, ValueError):
         pass
     if not isinstance(hist_doc, dict) or "by_sf" not in hist_doc:
-        # legacy single-sf layout {"sf": ..., "minima": ...}
-        hist_doc = (
-            {"by_sf": {str(hist_doc.get("sf")): {"minima": hist_doc.get("minima", {})}}}
-            if isinstance(hist_doc, dict) and "minima" in hist_doc
-            else {"by_sf": {}}
-        )
-    sf_hist = hist_doc["by_sf"].setdefault(sf_label, {})
-    if "by_cpus" not in sf_hist:
-        # migrate the legacy cpus-agnostic minima: historical runs were
-        # 32-core except r10's one 8-core sweep, so they seed the 32 slot
-        sf_hist["by_cpus"] = (
-            {"32": {"minima": dict(sf_hist.get("minima", {}))}}
-            if sf_hist.get("minima")
-            else {}
-        )
-        sf_hist.pop("minima", None)
-        sf_hist.pop("last", None)
+        hist_doc = {"by_sf": {}}
+    sf_hist = hist_doc["by_sf"].setdefault(sf_label, {"by_cpus": {}})
     hist_minima: dict[str, float] = dict(
         sf_hist["by_cpus"].get(cpus_label, {}).get("minima", {})
     )

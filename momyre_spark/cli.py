@@ -13,6 +13,8 @@ The reference runs as ``momyre --force --zerop --inp <mongo-url> --out
 - ``--inp/--out``: URL overrides (run.go:127-132)
 - batch mode   : DDL reconcile + snapshot + orphan delete (§3.1)
 - stream mode  : continuous CDC via Structured Streaming (§3.2)
+- ``--lake-root``: batch/stream into the versioned snapshot store instead of
+  MySQL; ``--mode maintain`` compacts, z-orders and vacuums that store
 
 The Mongo source needs the Spark connector jar and the MySQL sink a DBAPI
 driver — both absent in this dev container, so ``main`` wires everything and
@@ -44,19 +46,19 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--mode",
                    choices=["batch", "stream", "both", "maintain", "prep"],
                    default="both",
-                   help="maintain: compact small files + vacuum expired "
-                        "versions of a --versioned --lake-root store")
+                   help="batch: snapshot (+ orphan delete into the JDBC "
+                        "sink); stream: CDC; both: batch then stream. With "
+                        "--lake-root, batch and stream commit versions to "
+                        "the snapshot store, which maintain compacts, "
+                        "z-orders and vacuums. prep: training-data prep")
     p.add_argument("--checkpoint", default="/tmp/momyre-spark-ckpt",
                    help="Structured Streaming checkpoint dir")
     p.add_argument("--sink-partitions", type=int, default=8,
                    help="max concurrent sink connections")
     p.add_argument("--lake-root", default=None,
-                   help="write to a parquet lake at this root instead of "
-                        "the JDBC sink (snapshot + copy-on-write CDC merge)")
-    p.add_argument("--versioned", action="store_true",
-                   help="with --lake-root: commit through the versioned "
-                        "snapshot store (time travel; one version per "
-                        "snapshot/micro-batch)")
+                   help="write to the versioned snapshot store at this root "
+                        "instead of the JDBC sink (one version per "
+                        "snapshot/micro-batch; time travel)")
     p.add_argument("--ts-guard-col", default=None,
                    help="sink sequence column: guard every write by the "
                         "per-key high-water mark (out-of-order transports)")
@@ -249,7 +251,7 @@ def main(argv: list[str] | None = None) -> int:
                     target_file_bytes=args.target_file_mb * 1024 * 1024,
                 )
             except FileNotFoundError:
-                print(f"{table}: no versioned store at {root}", file=sys.stderr)
+                print(f"{table}: no snapshot store at {root}", file=sys.stderr)
                 continue
             znote = ""
             if args.zorder:
@@ -271,9 +273,7 @@ def main(argv: list[str] | None = None) -> int:
     if args.mode in ("batch", "both"):
         if args.lake_root:
             for table in spec.tables:
-                engine.snapshot_to_lake(
-                    table, f"{args.lake_root}/{table}", versioned=args.versioned
-                )
+                engine.snapshot_to_lake(table, f"{args.lake_root}/{table}")
             print(f"snapshotted to lake: {sorted(spec.tables)}", file=sys.stderr)
         else:
             resynced = engine.run_batch_sync()
@@ -296,7 +296,6 @@ def main(argv: list[str] | None = None) -> int:
             query = start_cdc_lake_stream(
                 ops, spec, lake_root=args.lake_root,
                 checkpoint_dir=args.checkpoint,
-                versioned=args.versioned,
             )
         else:
             query = start_cdc_stream(

@@ -131,33 +131,27 @@ class ReplicationEngine:
         table: str,
         path: str,
         partition_by: list[str] | None = None,
-        versioned: bool = False,
+        versioned: bool = True,
         stats_cols: list[str] | None = None,
         sort_by: list[str] | None = None,
     ) -> None:
-        """Snapshot a table into columnar lake layout instead of (or beside)
-        the JDBC sink — the engine extension that makes replicated data
-        directly queryable at 100 TB (partition pruning, column pruning).
+        """Snapshot a table into the lake (the versioned snapshot store,
+        sinks/snapshots.py) instead of (or beside) the JDBC sink: each
+        snapshot becomes a time-travelable version, and the follow-up CDC
+        stream (``start_cdc_lake_stream``) appends versions to the same
+        table. ``stats_cols``/``sort_by`` record per-partition column bounds
+        in the manifest and cluster rows so ``snapshot_read(stats_filter=
+        ...)`` can skip partitions; CDC merges maintain the bounds from then
+        on. ``versioned`` only accepts ``True``; it is kept for callers
+        that still pass it."""
+        if not versioned:
+            raise ValueError("momyre: the snapshot store is the only lake sink")
+        from momyre_spark.sinks.snapshots import snapshot_write
 
-        ``versioned=True`` commits through the snapshot store
-        (sinks/snapshots.py): each snapshot becomes a time-travelable
-        version, and the follow-up CDC stream (``start_cdc_lake_stream``
-        with ``versioned=True``) appends versions to the same table.
-        ``stats_cols``/``sort_by`` (versioned only) record per-partition
-        column bounds in the manifest and cluster rows so
-        ``snapshot_read(stats_filter=...)`` can skip partitions; CDC merges
-        maintain the bounds automatically from then on."""
         tspec = self.spec.tables[table]
         df = enforce_schema(self.source(table), tspec)
-        if versioned:
-            from momyre_spark.sinks.snapshots import snapshot_write
-
-            snapshot_write(self.spark, df, path, partition_by,
-                           stats_cols=stats_cols, sort_by=sort_by)
-            return
-        from momyre_spark.sinks.lake import write_partitioned
-
-        write_partitioned(df, path, partition_by or [])
+        snapshot_write(self.spark, df, path, partition_by,
+                       stats_cols=stats_cols, sort_by=sort_by)
 
     # -- orphan delete (reference J1, run.go:249-279) ------------------
     def delete_orphans(self, table: str, sink_ids: DataFrame) -> None:

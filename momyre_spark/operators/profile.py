@@ -2,8 +2,8 @@
 
 A 100 TB pipeline needs table stats before it needs anything else: null
 ratios gate quality filters, NDVs drive join-strategy choices (broadcast vs
-shuffle), min/max feed partition-layout decisions (see sinks/lake.py
-z-order). This computes, in a single pass over the table, per column:
+shuffle), min/max feed partition-layout decisions (see
+sinks/snapshots.snapshot_zorder). This computes, in a single pass over the table, per column:
 
     n_rows, n_nulls, ndv, min/max (numeric as double, strings lexically)
 

@@ -318,6 +318,20 @@ def _srp_bucket_sql(vec_col: str, table_planes: list[list[float]]) -> str:
 _EXPR_PLANE_LIMIT = 96
 
 
+def _check_planes(planes: list[list[list[float]]]) -> None:
+    """Both bucket paths read the plane count from ``planes[0]`` and pack
+    all planes into one (tables*planes, dim) matrix, so a ragged list
+    would silently mis-bucket or fail deep in numpy — refuse it here."""
+    for what, sizes in (
+        ("plane count", {len(tp) for tp in planes}),
+        ("dimension", {len(p) for tp in planes for p in tp}),
+    ):
+        if len(sizes) > 1:
+            raise ValueError(
+                f"momyre: ragged SRP planes, {what} varies: {sorted(sizes)}"
+            )
+
+
 def _with_srp_buckets_arrow(
     df: DataFrame,
     planes: list[list[list[float]]],
@@ -371,6 +385,7 @@ def with_srp_buckets(
     Codegen fold expressions up to ``_EXPR_PLANE_LIMIT`` total planes
     (bit-identical with the SQL-oracle recipe); one Arrow matmul batch
     above it (production plane counts)."""
+    _check_planes(planes)
     if planes and len(planes) * len(planes[0]) > _EXPR_PLANE_LIMIT:
         return _with_srp_buckets_arrow(df, planes, vec_col, out_col)
     items = ", ".join(_srp_bucket_sql(vec_col, tp) for tp in planes)
@@ -400,6 +415,7 @@ def srp_banded_rows(
     the expression array + posexplode path is unchanged (it is the
     SQL-oracle recipe and evaluates once, in codegen).
     """
+    _check_planes(planes)
     if not planes or len(planes) * len(planes[0]) <= _EXPR_PLANE_LIMIT:
         return with_srp_buckets(df, planes, vec_col).select(
             id_col, F.posexplode("__buckets").alias("table", "bucket")

@@ -1,4 +1,4 @@
-"""Lakehouse sink: partitioned/bucketed columnar table layout.
+"""Lake layout writers: partitioned/bucketed columnar tables.
 
 The reference's only sink is MySQL; at 100 TB the replicated/derived tables
 live in a lake (parquet/Delta/Iceberg) where physical layout IS the query
@@ -12,14 +12,13 @@ optimization:
   and aggregations on the bucket key skip their shuffle entirely when both
   sides share the bucketing (the lake analog of co-located joins).
 
-Both default to ``maxRecordsPerFile`` capping so one skewed partition cannot
-produce an unsplittable multi-GB file.
+Replicated tables (snapshot, CDC merge, compaction, Z-order) live in the
+versioned snapshot store, ``sinks/snapshots.py`` — the one lake sink.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 
 def write_partitioned(
@@ -50,309 +49,3 @@ def write_bucketed(
         writer = writer.sortBy(sort_by)
     writer.format("parquet").saveAsTable(table)
 
-
-def _read_or_empty(
-    spark: SparkSession, path: str, schema: str
-) -> tuple[DataFrame, bool]:
-    try:
-        return spark.read.parquet(path), True
-    except Exception:  # first batch: table does not exist yet
-        return spark.createDataFrame([], schema), False
-
-
-def apply_actions(
-    existing: DataFrame,
-    actions: DataFrame,
-    fields: dict[str, str],
-    key: str = "_id",
-) -> DataFrame:
-    """The MERGE expression core: existing rows full-outer-joined with a
-    ``merge_ops_microbatch`` action frame -> post-merge rows. Shared by the
-    in-place lake merge and the versioned-snapshot merge; semantics match
-    the JDBC sink (upsert replaces, patch updates present fields, delete
-    drops, patch-to-missing is a no-op).
-
-    ADDITIVE SCHEMA EVOLUTION: a field declared in ``fields`` but absent
-    from ``existing`` (the batch that first introduces a column) reads as a
-    typed NULL on the existing side — pre-evolution rows keep NULL for the
-    new column, exactly what a lakehouse MERGE with
-    ``mergeSchema``/``schema.autoMerge`` does. Removing or retyping a
-    column stays an error (silent data loss otherwise)."""
-    if "__present" not in actions.columns:
-        # upsert/delete-only callers need no patch field list
-        actions = actions.withColumn(
-            "__present", F.lit(None).cast("array<string>")
-        )
-    existing_cols = set(existing.columns)
-    a, e = actions.alias("a"), existing.alias("e")
-    ak, ek = F.col(f"a.{key}"), F.col(f"e.{key}")
-    act = F.col("a.__action")
-    joined = e.join(a, ek == ak, "full_outer")
-    keep = ~(
-        F.coalesce(act == "delete", F.lit(False))
-        | ((act == "patch") & ek.isNull())  # patch to missing key: no-op
-    )
-    out_fields = []
-    for f, ftype in fields.items():
-        e_f = (
-            F.col(f"e.{f}")
-            if f in existing_cols
-            else F.lit(None).cast(ftype)
-        )
-        patched = F.when(
-            F.array_contains(F.col("a.__present"), F.lit(f)), F.col(f"a.{f}")
-        ).otherwise(e_f)
-        out_fields.append(
-            F.when(act == "upsert", F.col(f"a.{f}"))
-            .when(act == "patch", patched)
-            .otherwise(e_f)
-            .alias(f)
-        )
-    return joined.filter(keep).select(F.coalesce(ak, ek).alias(key), *out_fields)
-
-
-def merge_cdc_actions(
-    spark: SparkSession,
-    path: str,
-    actions: DataFrame,
-    fields: dict[str, str],
-    key: str = "_id",
-    partition_by: list[str] | None = None,
-    max_records_per_file: int = 5_000_000,
-) -> None:
-    """Copy-on-write MERGE of a CDC action frame into a parquet lake table —
-    the lake analog of the JDBC transactional apply, for stacks without a
-    Delta/Iceberg runtime (none is available here; with one, this function
-    is a single ``MERGE INTO``).
-
-    ``actions`` is a ``merge_ops_microbatch`` frame: one row per key with
-    ``__action`` in (upsert, patch, delete), ``__present`` naming the fields
-    a patch sets, and one typed column per declared field. Semantics match
-    the JDBC sink: upsert replaces the row, patch updates only its present
-    fields (an explicit null stays null), delete removes the key, and a
-    patch to a nonexistent key is a no-op. Re-merging the same batch is
-    idempotent — the Structured Streaming at-least-once replay contract.
-
-    Scale shape: unpartitioned tables are fully rewritten (small dims);
-    with ``partition_by``, only AFFECTED partitions are rewritten via
-    dynamic partition overwrite — affected = partitions holding an acted-on
-    key plus partitions receiving rows, so a 100 TB table with a 1-partition
-    batch rewrites one partition. Affected partitions whose rows all vanish
-    (delete/move-out) are cleared explicitly — dynamic overwrite cannot
-    write an empty partition.
-    """
-    schema = f"`{key}` string, " + ", ".join(
-        f"`{f}` {t}" for f, t in fields.items()
-    )
-    existing, existed = _read_or_empty(spark, path, schema)
-    # additive schema evolution: newly declared fields are absent from the
-    # stored table — apply_actions fills them with typed NULLs
-    existing = existing.select(
-        key, *[f for f in fields if f in existing.columns]
-    )
-
-    if partition_by and existed:
-        # prune the merge's read side to partitions that can change
-        touched = existing.join(
-            actions.select(key), key, "left_semi"
-        ).select(*partition_by).distinct()
-        incoming = actions.filter(F.col("__action") != "delete").select(
-            *partition_by
-        ).distinct()
-        affected = touched.unionByName(incoming).distinct()
-        existing = existing.join(
-            F.broadcast(affected), partition_by, "left_semi"
-        )
-
-    merged = apply_actions(existing, actions, fields, key)
-
-    if not partition_by:
-        # full rewrite through a staging read: the output overwrites its own
-        # input, so materialize first (localCheckpoint cuts the lineage)
-        merged.localCheckpoint(eager=True).write.mode("overwrite").option(
-            "maxRecordsPerFile", str(max_records_per_file)
-        ).parquet(path)
-        return
-
-    merged = merged.localCheckpoint(eager=True)
-    if existed:
-        # partitions that were affected but end up with zero rows would be
-        # silently skipped by dynamic overwrite — clear them explicitly
-        emptied = [
-            r
-            for r in affected.subtract(
-                merged.select(*partition_by).distinct()
-            ).collect()
-        ]
-        if emptied:
-            jvm = spark._jvm
-            jsc = spark._jsc
-            hconf = jsc.hadoopConfiguration()
-            for r in emptied:
-                part_path = "/".join(
-                    f"{c}={r[c]}" for c in partition_by
-                )
-                p = jvm.org.apache.hadoop.fs.Path(f"{path}/{part_path}")
-                fs = p.getFileSystem(hconf)
-                fs.delete(p, True)
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            merged.write.mode("overwrite")
-            .option("maxRecordsPerFile", str(max_records_per_file))
-            .partitionBy(*partition_by)
-            .parquet(path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-
-
-def compact_partitions(
-    spark: SparkSession,
-    path: str,
-    partition_by: list[str] | None = None,
-    target_records_per_file: int = 5_000_000,
-    small_file_threshold: int = 4,
-) -> int:
-    """Small-file compaction: rewrite partitions whose file count exceeds
-    ``small_file_threshold`` into few large files. Returns the number of
-    partitions rewritten (0 = nothing to do).
-
-    Streaming CDC merges and frequent small batches accrete files; scans
-    then pay per-file open cost and lose row-group locality. Compaction is
-    the lake's VACUUM: per affected partition, read -> coalesce ->
-    dynamic-partition-overwrite, leaving well-sized partitions untouched.
-    Unpartitioned tables compact whole when over the threshold.
-    """
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    root = jvm.org.apache.hadoop.fs.Path(path)
-    fs = root.getFileSystem(hconf)
-    if not fs.exists(root):
-        return 0
-
-    def parquet_count(p) -> int:
-        it, n = fs.listFiles(p, True), 0
-        while it.hasNext():
-            if it.next().getPath().getName().endswith(".parquet"):
-                n += 1
-        return n
-
-    if not partition_by:
-        if parquet_count(root) <= small_file_threshold:
-            return 0
-        df = spark.read.parquet(path).localCheckpoint(eager=True)
-        (
-            df.coalesce(1)
-            .write.mode("overwrite")
-            .option("maxRecordsPerFile", str(target_records_per_file))
-            .parquet(path)
-        )
-        return 1
-
-    # find over-fragmented leaf partitions
-    fragmented = []
-    stack = [(root, {})]
-    while stack:
-        cur, vals = stack.pop()
-        for st in fs.listStatus(cur):
-            if not st.isDirectory():
-                continue
-            name = st.getPath().getName()
-            if "=" not in name:
-                continue
-            col, val = name.split("=", 1)
-            nxt = dict(vals, **{col: val})
-            if len(nxt) == len(partition_by):
-                if parquet_count(st.getPath()) > small_file_threshold:
-                    fragmented.append(nxt)
-            else:
-                stack.append((st.getPath(), nxt))
-    if not fragmented:
-        return 0
-
-    df = spark.read.parquet(path)
-    cond = None
-    for vals in fragmented:
-        clause = None
-        for c in partition_by:
-            eq = F.col(c).cast("string") == vals[c]
-            clause = eq if clause is None else (clause & eq)
-        cond = clause if cond is None else (cond | clause)
-    part = df.filter(cond).localCheckpoint(eager=True)
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            part.repartition(*[F.col(c) for c in partition_by])
-            .write.mode("overwrite")
-            .option("maxRecordsPerFile", str(target_records_per_file))
-            .partitionBy(*partition_by)
-            .parquet(path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    return len(fragmented)
-
-
-def _zvalue(bucket_cols: list, bits: int):
-    """Round-robin bit-interleave of per-column bucket ids -> one long.
-    Rows close in every dimension get close z-values, so range-partitioned
-    files are tight hyper-rectangles with narrow min/max column stats."""
-    z = F.lit(0).cast("long")
-    n = len(bucket_cols)
-    for i in range(bits):
-        for j, b in enumerate(bucket_cols):
-            bit = F.shiftright(b, i).bitwiseAND(F.lit(1))
-            z = z.bitwiseOR(F.shiftleft(bit, i * n + j))
-    return z
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    cols: list[str],
-    num_files: int = 64,
-    bits: int = 10,
-    mode: str = "overwrite",
-) -> None:
-    """Multi-dimensional data clustering (Z-order curve) for the lake.
-
-    Linear sorting clusters ONE column: predicates on any other column hit
-    every file. Z-ordering interleaves the bit representations of several
-    columns, so each output file covers a small hyper-rectangle of the
-    value space and parquet min/max stats prune scans for predicates on ANY
-    of the z-ordered columns.
-
-    Mechanics: per column, a linear ``width_bucket`` id over the observed
-    [min, max] (a 2-row driver-side stats read — same cost class as
-    ``approxQuantile``); bucket ids bit-interleave into one z-value; rows
-    range-partition and sort by it. The stats read is the only non-map
-    step; the layout write itself is one range shuffle, identical to a
-    plain global sort. Linear bucketing assumes roughly uniform value
-    spread — for heavily skewed columns, pre-transform (e.g. rank or log)
-    before z-ordering.
-    """
-    stats = df.agg(
-        *[F.min(F.col(c).cast("double")).alias(f"mn_{c}") for c in cols],
-        *[F.max(F.col(c).cast("double")).alias(f"mx_{c}") for c in cols],
-    ).first()
-    nb = 1 << bits
-    buckets = []
-    for c in cols:
-        mn, mx = stats[f"mn_{c}"], stats[f"mx_{c}"]
-        if mn is None or mx is None or mx <= mn:
-            buckets.append(F.lit(0).cast("long"))
-            continue
-        b = F.width_bucket(F.col(c).cast("double"), F.lit(mn), F.lit(mx), F.lit(nb))
-        buckets.append(
-            F.least(F.greatest(b - 1, F.lit(0)), F.lit(nb - 1)).cast("long")
-        )
-    zdf = (
-        df.withColumn("__zv", _zvalue(buckets, bits))
-        .repartitionByRange(num_files, "__zv")
-        .sortWithinPartitions("__zv")
-        .drop("__zv")
-    )
-    zdf.write.mode(mode).parquet(path)

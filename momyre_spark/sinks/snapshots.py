@@ -2,13 +2,14 @@
 travel and copy-on-write CDC merges (Iceberg-lite, no table-format runtime
 required).
 
-The in-place lake sink (sinks/lake.py) overwrites affected partitions;
-history is gone the moment the batch lands. This module adds the missing
-warehouse property: every commit is a new immutable VERSION described by a
-small JSON manifest mapping partition values to data directories. Readers
-resolve a manifest (any version — time travel) and scan exactly the listed
-directories; writers never mutate files a previous version references, so
-concurrent readers of version N are isolated from the commit of N+1.
+This is the engine's one lake sink: batch snapshots
+(``engine.snapshot_to_lake``) and streaming CDC merges
+(``streaming.pipeline.start_cdc_lake_stream``) both commit here. Every
+commit is a new immutable VERSION described by a small JSON manifest
+mapping partition values to data directories. Readers resolve a manifest
+(any version — time travel) and scan exactly the listed directories;
+writers never mutate files a previous version references, so concurrent
+readers of version N are isolated from the commit of N+1.
 
 Layout::
 
@@ -57,8 +58,6 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
-
-from momyre_spark.sinks.lake import apply_actions
 
 _M = "_manifests"
 
@@ -621,6 +620,57 @@ def snapshot_read(
     return out.drop(*[c for c in out.columns if c.startswith("__p_")])
 
 
+# ------------------------------------------------------- MERGE rows ----
+def _merge_rows(
+    existing: DataFrame,
+    actions: DataFrame,
+    fields: dict[str, str],
+    key: str = "_id",
+) -> DataFrame:
+    """The MERGE expression: existing rows full-outer-joined with a
+    ``merge_ops_microbatch`` action frame -> post-merge rows. Semantics
+    match the JDBC sink (upsert replaces, patch updates present fields,
+    delete drops, patch-to-missing is a no-op).
+
+    ADDITIVE SCHEMA EVOLUTION: a field declared in ``fields`` but absent
+    from ``existing`` (the batch that first introduces a column) reads as a
+    typed NULL on the existing side — pre-evolution rows keep NULL for the
+    new column, exactly what a lakehouse MERGE with
+    ``mergeSchema``/``schema.autoMerge`` does. Removing or retyping a
+    column stays an error (silent data loss otherwise)."""
+    if "__present" not in actions.columns:
+        # upsert/delete-only callers need no patch field list
+        actions = actions.withColumn(
+            "__present", F.lit(None).cast("array<string>")
+        )
+    existing_cols = set(existing.columns)
+    a, e = actions.alias("a"), existing.alias("e")
+    ak, ek = F.col(f"a.{key}"), F.col(f"e.{key}")
+    act = F.col("a.__action")
+    joined = e.join(a, ek == ak, "full_outer")
+    keep = ~(
+        F.coalesce(act == "delete", F.lit(False))
+        | ((act == "patch") & ek.isNull())  # patch to missing key: no-op
+    )
+    out_fields = []
+    for f, ftype in fields.items():
+        e_f = (
+            F.col(f"e.{f}")
+            if f in existing_cols
+            else F.lit(None).cast(ftype)
+        )
+        patched = F.when(
+            F.array_contains(F.col("a.__present"), F.lit(f)), F.col(f"a.{f}")
+        ).otherwise(e_f)
+        out_fields.append(
+            F.when(act == "upsert", F.col(f"a.{f}"))
+            .when(act == "patch", patched)
+            .otherwise(e_f)
+            .alias(f)
+        )
+    return joined.filter(keep).select(F.coalesce(ak, ek).alias(key), *out_fields)
+
+
 def snapshot_merge_cdc(
     spark: SparkSession,
     root: str,
@@ -650,7 +700,7 @@ def snapshot_merge_cdc(
         if seen is not None and seen >= batch_id:
             return parent  # replayed batch — state already committed
     if parent is None:
-        first = apply_actions(
+        first = _merge_rows(
             spark.createDataFrame(
                 [],
                 f"`{key}` string, "
@@ -679,7 +729,7 @@ def snapshot_merge_cdc(
     if not pby:
         # no lineage cut needed: the output dir (data/v{N}) never overlaps
         # the input version's files
-        merged = apply_actions(existing, actions, fields, key)
+        merged = _merge_rows(existing, actions, fields, key)
         dirs = _write_version_data(merged, root, v, None, max_records_per_file,
                                    sort_by=sort_by)
         man = {
@@ -715,7 +765,7 @@ def snapshot_merge_cdc(
         )
 
     pruned = existing.join(F.broadcast(affected), pby, "left_semi")
-    merged = apply_actions(pruned, actions, fields, key).localCheckpoint(
+    merged = _merge_rows(pruned, actions, fields, key).localCheckpoint(
         eager=True
     )
     new_dirs = _write_version_data(merged, root, v, pby, max_records_per_file,

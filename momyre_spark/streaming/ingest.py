@@ -253,11 +253,13 @@ def compact_ingest_state(
             for t in _STATE_TABLES
         }
         counts: dict[str, int] = {}
-        errors: dict[str, BaseException] = {}
+        errors: dict[str, Exception] = {}
+        # Exception, not BaseException: Ctrl-C and SystemExit are not a
+        # table's failure and propagate at once
         for t, fut in futures.items():
             try:
                 counts[t] = fut.result()
-            except BaseException as exc:  # noqa: BLE001 — re-raised below
+            except Exception as exc:  # noqa: BLE001 — re-raised below
                 errors[t] = exc
     if errors:
         # every table ran to completion either way; surface ALL failures

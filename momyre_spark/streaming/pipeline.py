@@ -26,7 +26,7 @@ with the official connector's updateDescription/fullDocument surface).
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 from typing import Any
 
 from pyspark.sql import DataFrame
@@ -229,20 +229,18 @@ def apply_actions(
         )
 
 
-def apply_ops_microbatch(
+def _merge_per_table(
     batch_df: DataFrame,
-    batch_id: int,
     spec: Spec,
+    apply: Callable[[TableSpec, dict[str, str], DataFrame], None],
     *,
-    connection_factory: ConnFactory,
-    dialect_name: str,
     order: Sequence[str] | None = None,
     ns_col: str = "ns",
-    num_partitions: int | None = None,
-    ts_guard_col: str | None = None,
-    tombstone_col: str | None = None,
+    emit_seq: bool = False,
 ) -> None:
-    """foreachBatch body: route ops by namespace, merge, apply per table.
+    """Route one micro-batch of ops by namespace, merge each table's ops to
+    one action per key, and hand ``apply(table_spec, fields, actions)`` the
+    result — the routing both CDC streams (sink and lake) share.
 
     The batch is persisted for the duration of the apply: each table's
     branch filters the same frame, and without the persist a 10-table spec
@@ -265,22 +263,46 @@ def apply_ops_microbatch(
             ops = batch_df.filter(F.col(ns_col) == tname)
             fields = {c: t for c, t in tspec.sql_columns.items() if c != "_id"}
             actions = merge_ops_microbatch(
-                ops, fields, key="_id", order=order,
-                emit_seq=ts_guard_col is not None,
+                ops, fields, key="_id", order=order, emit_seq=emit_seq,
             )
-            apply_actions(
-                actions,
-                tspec,
-                connection_factory=connection_factory,
-                dialect_name=dialect_name,
-                batch_id=batch_id,
-                num_partitions=num_partitions,
-                ts_guard_col=ts_guard_col,
-                tombstone_col=tombstone_col,
-            )
+            apply(tspec, fields, actions)
     finally:
         if multi_table:
             batch_df.unpersist()
+
+
+def apply_ops_microbatch(
+    batch_df: DataFrame,
+    batch_id: int,
+    spec: Spec,
+    *,
+    connection_factory: ConnFactory,
+    dialect_name: str,
+    order: Sequence[str] | None = None,
+    ns_col: str = "ns",
+    num_partitions: int | None = None,
+    ts_guard_col: str | None = None,
+    tombstone_col: str | None = None,
+) -> None:
+    """foreachBatch body of the sink stream: ``_merge_per_table`` routing,
+    then ``apply_actions`` per table."""
+
+    def apply(tspec: TableSpec, _fields, actions: DataFrame) -> None:
+        apply_actions(
+            actions,
+            tspec,
+            connection_factory=connection_factory,
+            dialect_name=dialect_name,
+            batch_id=batch_id,
+            num_partitions=num_partitions,
+            ts_guard_col=ts_guard_col,
+            tombstone_col=tombstone_col,
+        )
+
+    _merge_per_table(
+        batch_df, spec, apply, order=order, ns_col=ns_col,
+        emit_seq=ts_guard_col is not None,
+    )
 
 
 def start_cdc_stream(
@@ -317,6 +339,10 @@ def start_cdc_stream(
             tombstone_col=tombstone_col,
         )
 
+    return _start_foreach_batch(ops_stream, handle, checkpoint_dir, trigger)
+
+
+def _start_foreach_batch(ops_stream, handle, checkpoint_dir, trigger):
     writer = (
         ops_stream.writeStream.foreachBatch(handle)
         .option("checkpointLocation", checkpoint_dir)
@@ -369,67 +395,35 @@ def start_cdc_lake_stream(
     ns_col: str = "ns",
     partition_by: dict[str, list[str]] | None = None,
     trigger: dict[str, Any] | None = None,
-    versioned: bool = False,
+    versioned: bool = True,
 ):
     """CDC stream into the LAKE: each micro-batch merges per-table actions
-    into ``{lake_root}/{table}`` via the copy-on-write parquet MERGE
-    (sinks/lake.merge_cdc_actions) — the path that makes replicated tables
-    directly scannable at 100 TB without an RDBMS in the loop.
-
-    Exactly-once story: Structured Streaming serializes batches and
-    checkpoints offsets; the merge itself is idempotent (re-merging a
-    replayed batch reproduces the same table), so at-least-once foreachBatch
-    delivery converges. ``partition_by`` optionally maps table -> partition
-    columns for affected-partition-only rewrites.
-
-    ``versioned=True`` routes merges through the snapshot store
-    (sinks/snapshots.snapshot_merge_cdc): every micro-batch commits a new
-    manifest version, so the table is time-travelable batch-by-batch and
-    readers are isolated from in-flight merges; pair with a periodic
-    ``snapshot_vacuum`` for retention.
-    """
-    from momyre_spark.sinks.lake import merge_cdc_actions
-    from momyre_spark.sinks.snapshots import snapshot_merge_cdc
+    into the snapshot store at ``{lake_root}/{table}`` as a new version
+    (sinks/snapshots.snapshot_merge_cdc), so replicated tables are directly
+    scannable and time-travelable without an RDBMS in the loop. Pair with
+    periodic compaction/vacuum (CLI ``--mode maintain``). ``partition_by``
+    optionally maps table -> partition columns for affected-partition-only
+    rewrites. The epoch id recorded in each manifest makes a replayed batch
+    skip instead of re-committing an identical version. ``versioned`` only
+    accepts ``True``; it is kept for callers that still pass it."""
+    if not versioned:
+        raise ValueError("momyre: the snapshot store is the only lake sink")
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        o = order
-        if o is None:
-            o = tuple(c for c in ("ts", "seq", "tok") if c in batch_df.columns)
-        multi_table = len(spec.tables) > 1
-        if multi_table:
-            batch_df = batch_df.persist()
-        try:
-            for tname, tspec in spec.tables.items():
-                ops = batch_df.filter(F.col(ns_col) == tname)
-                fields = {
-                    c: t for c, t in tspec.sql_columns.items() if c != "_id"
-                }
-                actions = merge_ops_microbatch(ops, fields, key="_id", order=o)
-                kwargs = {
-                    "key": "_id",
-                    "partition_by": (partition_by or {}).get(tname),
-                }
-                if versioned:
-                    # the epoch id makes replayed batches skip instead of
-                    # re-committing an identical version
-                    kwargs["batch_id"] = batch_id
-                merge = snapshot_merge_cdc if versioned else merge_cdc_actions
-                merge(
-                    batch_df.sparkSession,
-                    f"{lake_root}/{tname}",
-                    actions,
-                    fields,
-                    **kwargs,
-                )
-        finally:
-            if multi_table:
-                batch_df.unpersist()
+        # looked up per batch so a replaced snapshot_merge_cdc takes effect
+        from momyre_spark.sinks import snapshots
 
-    writer = (
-        ops_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
+        def merge(tspec: TableSpec, fields, actions: DataFrame) -> None:
+            snapshots.snapshot_merge_cdc(
+                batch_df.sparkSession,
+                f"{lake_root}/{tspec.name}",
+                actions,
+                fields,
+                key="_id",
+                partition_by=(partition_by or {}).get(tspec.name),
+                batch_id=batch_id,
+            )
+
+        _merge_per_table(batch_df, spec, merge, order=order, ns_col=ns_col)
+
+    return _start_foreach_batch(ops_stream, handle, checkpoint_dir, trigger)

@@ -47,16 +47,6 @@ def test_lake_root_flag_parses():
     assert args.lake_root == "/tmp/lake"
 
 
-def test_versioned_flag_parses():
-    from momyre_spark.cli import build_parser
-
-    args = build_parser().parse_args(
-        ["--config", "x.yml", "--lake-root", "/tmp/lake", "--versioned"]
-    )
-    assert args.versioned is True
-    assert build_parser().parse_args(["--config", "x.yml"]).versioned is False
-
-
 def test_maintain_mode_compacts_and_vacuums(spark, tmp_path, monkeypatch):
     """End-to-end maintain run against a real versioned store (engine
     boundaries untouched: maintain never dials Mongo/MySQL)."""

@@ -538,3 +538,24 @@ def test_ingest_keeps_ivfpq_index_fresh(spark, tmp_path):
     assert sorted(map(tuple, got.collect())) == sorted(
         map(tuple, exact.collect())
     )
+
+
+def test_state_compaction_lets_keyboard_interrupt_through(
+    spark, tmp_path, monkeypatch
+):
+    """A per-table failure is collected and re-raised after the others
+    finish, but KeyboardInterrupt is not a table failure: it must surface
+    as itself, not be shadowed by the first table's ValueError."""
+    import momyre_spark.streaming.ingest as ingest
+
+    def tail_epochs(_spark, tail_dir):
+        table = tail_dir.rsplit("/", 1)[-1]
+        if table == ingest._STATE_TABLES[0]:
+            raise ValueError("first table failed")
+        if table == ingest._STATE_TABLES[1]:
+            raise KeyboardInterrupt
+        return []
+
+    monkeypatch.setattr(ingest, "_tail_epochs", tail_epochs)
+    with pytest.raises(KeyboardInterrupt):
+        ingest.compact_ingest_state(spark, str(tmp_path / "corpus"))

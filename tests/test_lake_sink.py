@@ -1,5 +1,8 @@
 """Partitioned/bucketed lake layout tests: pruning and shuffle elimination
-must be visible in the physical plan, not just hoped for."""
+must be visible in the physical plan, not just hoped for — and Z-order
+clustering must make files skippable on both columns — plus one end-to-end
+CDC stream into the lake. The rest of the lake sink (the snapshot store:
+CDC merge, compaction) is tested in test_snapshots.py."""
 
 from __future__ import annotations
 
@@ -51,196 +54,15 @@ def test_bucketed_join_eliminates_shuffle(spark, tmp_path):
     spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
 
 
-# ------------------------------------------------------------------
-# Copy-on-write CDC merge into the lake (merge_cdc_actions)
-# ------------------------------------------------------------------
-FIELDS = {"type": "string", "email": "string"}
-
-
-def _actions(spark, rows):
-    return spark.createDataFrame(
-        rows, "`_id` string, __action string, __present array<string>, "
-              "type string, email string"
-    )
-
-
-def _lake(spark, path):
-    return {
-        r["_id"]: (r["type"], r["email"])
-        for r in spark.read.parquet(path).collect()
-    }
-
-
-def test_lake_merge_upsert_patch_delete(spark, tmp_path):
-    path = str(tmp_path / "users_lake")
-    b1 = _actions(spark, [
-        ("a", "upsert", ["type", "email"], "admin", "a@x"),
-        ("b", "upsert", ["type", "email"], "user", "b@x"),
-    ])
-    from momyre_spark.sinks.lake import merge_cdc_actions
-
-    merge_cdc_actions(spark, path, b1, FIELDS)
-    assert _lake(spark, path) == {"a": ("admin", "a@x"), "b": ("user", "b@x")}
-
-    b2 = _actions(spark, [
-        ("a", "patch", ["email"], None, "a2@x"),     # only email changes
-        ("b", "delete", [], None, None),
-        ("c", "patch", ["type"], "ghost", None),     # patch to missing: no-op
-        ("d", "upsert", ["type"], "new", None),      # absent field -> NULL
-    ])
-    merge_cdc_actions(spark, path, b2, FIELDS)
-    assert _lake(spark, path) == {"a": ("admin", "a2@x"), "d": ("new", None)}
-
-
-def test_lake_merge_replay_is_idempotent(spark, tmp_path):
-    """Re-merging the SAME action batch (Structured Streaming at-least-once
-    replay) must not change the table."""
-    from momyre_spark.sinks.lake import merge_cdc_actions
-
-    path = str(tmp_path / "users_lake")
-    merge_cdc_actions(spark, path, _actions(spark, [
-        ("a", "upsert", ["type", "email"], "v1", "e1"),
-    ]), FIELDS)
-    batch = _actions(spark, [
-        ("a", "patch", ["type"], "v2", None),
-        ("b", "upsert", ["type", "email"], "nb", "eb"),
-    ])
-    merge_cdc_actions(spark, path, batch, FIELDS)
-    state1 = _lake(spark, path)
-    merge_cdc_actions(spark, path, batch, FIELDS)  # crash-replay
-    assert _lake(spark, path) == state1 == {
-        "a": ("v2", "e1"), "b": ("nb", "eb")
-    }
-
-
-def test_lake_merge_streaming_foreachbatch(spark, tmp_path):
-    """ops stream -> merge_ops_microbatch -> lake merge, end to end."""
-    import json
-
-    from pyspark.sql import Row
-
-    from momyre_spark.operators.cdc import merge_ops_microbatch
-    from momyre_spark.sinks.lake import merge_cdc_actions
-
-    path = str(tmp_path / "lake_users")
-    src = str(tmp_path / "ops_in")
-    ops = [
-        Row(ts=1, ns="users", op="insert", _id="a",
-            payload=json.dumps({"type": "admin", "email": "a@x"})),
-        Row(ts=2, ns="users", op="insert", _id="b",
-            payload=json.dumps({"type": "user", "email": "b@x"})),
-        Row(ts=3, ns="users", op="update", _id="a",
-            payload=json.dumps({"email": "a2@x"})),
-        Row(ts=4, ns="users", op="delete", _id="b", payload="{}"),
-    ]
-    spark.createDataFrame(ops).write.json(src)
-
-    def handle(batch_df, batch_id):
-        actions = merge_ops_microbatch(batch_df, FIELDS, key="_id", order=("ts",))
-        merge_cdc_actions(spark, path, actions, FIELDS)
-
-    stream = spark.readStream.schema(
-        "ts long, ns string, op string, `_id` string, payload string"
-    ).json(src)
-    q = (stream.writeStream.foreachBatch(handle)
-         .option("checkpointLocation", str(tmp_path / "ckpt"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    assert _lake(spark, path) == {"a": ("admin", "a2@x")}
-
-
-def test_lake_merge_partitioned_rewrites_only_affected(spark, tmp_path):
-    """Partitioned merge: untouched partitions keep their files (mtime
-    unchanged); a partition emptied by deletes disappears."""
-    import os
-    import time
-
-    from momyre_spark.sinks.lake import merge_cdc_actions
-
-    fields = {"region": "string", "v": "string"}
-
-    def acts(rows):
-        return spark.createDataFrame(
-            rows, "`_id` string, __action string, __present array<string>, "
-                  "region string, v string")
-
-    path = str(tmp_path / "part_lake")
-    merge_cdc_actions(spark, path, acts([
-        ("a", "upsert", ["region", "v"], "eu", "1"),
-        ("b", "upsert", ["region", "v"], "us", "1"),
-        ("c", "upsert", ["region", "v"], "ap", "1"),
-    ]), fields, partition_by=["region"])
-
-    def files(p):
-        out = {}
-        for root, _dirs, names in os.walk(p):
-            for n in names:
-                if n.endswith(".parquet"):
-                    fp = os.path.join(root, n)
-                    out[fp] = os.path.getmtime(fp)
-        return out
-
-    before = files(path)
-    time.sleep(1.1)
-    merge_cdc_actions(spark, path, acts([
-        ("b", "patch", ["v"], None, "2"),   # touches us only
-        ("c", "delete", [], None, None),    # empties ap
-    ]), fields, partition_by=["region"])
-    after = files(path)
-
-    eu_before = {f: t for f, t in before.items() if "region=eu" in f}
-    assert all(after.get(f) == t for f, t in eu_before.items())  # eu untouched
-    assert not any("region=ap" in f for f in after)              # ap cleared
-    got = {r["_id"]: (r["region"], r["v"])
-           for r in spark.read.parquet(path).collect()}
-    assert got == {"a": ("eu", "1"), "b": ("us", "2")}
-
-
-def test_compaction_reduces_files_and_preserves_data(spark, tmp_path):
-    import os
-
-    from momyre_spark.sinks.lake import compact_partitions
-
-    path = str(tmp_path / "frag")
-    df = spark.range(1000).select(
-        F.col("id"),
-        (F.col("id") % 2).cast("string").alias("p"),
-    )
-    # 16 writers per partition -> fragmented layout
-    df.repartition(16).write.partitionBy("p").parquet(path)
-
-    def nfiles(sub):
-        d = os.path.join(path, sub)
-        return len([f for f in os.listdir(d) if f.endswith(".parquet")])
-
-    assert nfiles("p=0") > 4
-    before = {r["id"] for r in spark.read.parquet(path).collect()}
-    n = compact_partitions(spark, path, partition_by=["p"])
-    assert n == 2
-    assert nfiles("p=0") == 1 and nfiles("p=1") == 1
-    assert {r["id"] for r in spark.read.parquet(path).collect()} == before
-    # second run: nothing to do
-    assert compact_partitions(spark, path, partition_by=["p"]) == 0
-
-
-def test_compaction_unpartitioned(spark, tmp_path):
-    from momyre_spark.sinks.lake import compact_partitions
-
-    path = str(tmp_path / "frag2")
-    spark.range(500).repartition(12).write.parquet(path)
-    before = {r["id"] for r in spark.read.parquet(path).collect()}
-    assert compact_partitions(spark, path) == 1
-    assert {r["id"] for r in spark.read.parquet(path).collect()} == before
-    assert compact_partitions(spark, path) == 0
-
-
 def test_cdc_lake_stream_end_to_end(spark, tmp_path):
     """Raw oplog -> decode -> start_cdc_lake_stream -> per-table lake state,
-    including a txn touching one key twice (seq order) and a delete."""
+    including a txn touching one key twice (seq order) and a delete. The
+    lake table is the snapshot store, read back at its current version."""
     import json
 
     from pyspark.sql import Row
 
+    from momyre_spark.sinks.snapshots import snapshot_read
     from momyre_spark.sources.opslog import decode_oplog
     from momyre_spark.spec import parse_spec
     from momyre_spark.streaming.pipeline import start_cdc_lake_stream
@@ -279,7 +101,7 @@ def test_cdc_lake_stream_end_to_end(spark, tmp_path):
     q.awaitTermination(120)
 
     got = {r["_id"]: (r["type"], r["email"], r["v"])
-           for r in spark.read.parquet(str(tmp_path / "lake" / "users")).collect()}
+           for r in snapshot_read(spark, str(tmp_path / "lake" / "users")).collect()}
     assert got == {
         "a": ("admin", "a2@x", None),
         "c": (None, None, "last"),   # txn: insert then update, seq-ordered
@@ -287,51 +109,52 @@ def test_cdc_lake_stream_end_to_end(spark, tmp_path):
 
 
 def test_zorder_clusters_both_dimensions(spark, tmp_path):
-    """Z-ordered layout: a selective predicate on the SECOND clustered
-    column touches far fewer files than a linearly-sorted layout (where
-    every file spans the full second-column range). Measured as the number
-    of files that actually contain matching rows — the same file set
-    parquet min/max stats let the scan skip."""
-    from pyspark.sql import functions as F
-
-    from momyre_spark.sinks.lake import write_zordered
-
-    n = 20_000
-    grid = spark.range(n).select(
-        (F.col("id") % 1000).alias("x"),
-        ((F.col("id") * 7919) % 1000).alias("y"),
-        F.col("id").alias("payload"),
+    """snapshot_zorder on a 32x32 grid: a point predicate on BOTH columns
+    lands in a small minority of the clustered files (per-file min/max
+    bounds — the file set parquet stats let a scan skip), against nearly
+    every file of the unclustered parent. Default-lane sibling of the slow
+    test_snapshots.py::test_zorder_preserves_content_and_clusters_files."""
+    from momyre_spark.sinks.snapshots import (
+        read_manifest,
+        snapshot_read,
+        snapshot_write,
+        snapshot_zorder,
     )
-    zpath = str(tmp_path / "zorder")
-    lpath = str(tmp_path / "linear")
-    write_zordered(grid, zpath, ["x", "y"], num_files=16)
-    grid.repartitionByRange(16, "x").sortWithinPartitions("x").write.parquet(lpath)
 
-    def files_with_matches(path):
-        df = spark.read.parquet(path).filter(F.col("y") < 60)
-        return df.select(
-            F.input_file_name().alias("f")
-        ).distinct().count()
-
-    z_files = files_with_matches(zpath)
-    l_files = files_with_matches(lpath)
-    # linear-by-x layout spreads every y-range over all 16 files
-    assert l_files == 16
-    assert z_files < l_files / 2, (z_files, l_files)
-    # layout must not change the data
-    assert spark.read.parquet(zpath).count() == n
-
-
-def test_lake_merge_adds_new_column_additively(spark, tmp_path):
-    from momyre_spark.sinks.lake import merge_cdc_actions
-
-    path = str(tmp_path / "t")
-    spark.createDataFrame([("a", 1)], "_id string, x long").write.parquet(path)
-    acts = spark.createDataFrame(
-        [("b", "upsert", 2, "new", ["x", "y"])],
-        "_id string, __action string, x long, y string, __present array<string>",
+    root = str(tmp_path / "store")
+    df = (
+        spark.range(1024)
+        .selectExpr(
+            "cast(id as string) as _id",
+            "cast(id % 32 as long) as x",
+            "cast(id div 32 as long) as y",
+            "xxhash64(id) as salt",
+        )
+        .repartition(4, "salt")
+        .drop("salt")
     )
-    merge_cdc_actions(spark, path, acts, {"x": "long", "y": "string"})
-    got = {r["_id"]: (r["x"], r["y"])
-           for r in spark.read.parquet(path).collect()}
-    assert got == {"a": (1, None), "b": (2, "new")}
+    v1 = snapshot_write(spark, df, root)
+    v2 = snapshot_zorder(
+        spark, root, ["x", "y"], bits=5, target_file_bytes=1024
+    )
+    assert snapshot_read(spark, root).count() == 1024
+
+    def file_bounds(version):
+        dirs = list(read_manifest(spark, root, version)["partitions"].values())
+        return spark.read.parquet(*dirs).groupBy(F.input_file_name()).agg(
+            F.min("x").alias("x0"), F.max("x").alias("x1"),
+            F.min("y").alias("y0"), F.max("y").alias("y1"),
+        ).collect()
+
+    def hits(bounds):
+        return sum(
+            1 for b in bounds for px, py in ((3, 25), (17, 8), (30, 30))
+            if b["x0"] <= px <= b["x1"] and b["y0"] <= py <= b["y1"]
+        )
+
+    before, after = file_bounds(v1), file_bounds(v2)
+    assert len(after) >= 4
+    assert hits(before) >= len(before) * 3 * 0.7
+    assert hits(after) <= len(after) * 3 * 0.35, (
+        hits(before), hits(after), len(before), len(after)
+    )

@@ -1625,3 +1625,35 @@ def test_srp_banded_rows_matches_array_twin_exactly(spark):
             )
         )
         assert got == ref, f"tables={tables}"
+
+
+def test_srp_ragged_planes_rejected_both_paths(spark):
+    """A planes list whose tables differ in plane count or dimension is
+    refused with a clear ValueError by both bucket entry points, below
+    and above the expression plane limit."""
+    import pytest
+
+    from momyre_spark.operators.similarity import (
+        _EXPR_PLANE_LIMIT,
+        srp_banded_rows,
+        srp_planes,
+        with_srp_buckets,
+    )
+
+    df = spark.createDataFrame(
+        [(0, [1.0] * 16)], "vec_id long, embedding array<double>"
+    )
+    for tables, planes_per in ((4, 8), (24, 12)):  # below / above limit
+        short_table = srp_planes(tables, planes_per, 16)
+        short_table[1] = short_table[1][:-1]
+        short_plane = srp_planes(tables, planes_per, 16)
+        short_plane[-1][0] = short_plane[-1][0][:-1]
+        assert (tables * (planes_per - 1) > _EXPR_PLANE_LIMIT) == (
+            tables == 24
+        )
+        for planes, msg in ((short_table, "plane count"),
+                            (short_plane, "dimension")):
+            with pytest.raises(ValueError, match=msg):
+                with_srp_buckets(df, planes, "embedding")
+            with pytest.raises(ValueError, match=msg):
+                srp_banded_rows(df, planes, "vec_id", "embedding")

@@ -269,12 +269,21 @@ def test_engine_snapshot_to_lake(spark, tmp_path):
     )
     eng = ReplicationEngine(spark, spec, lambda t: src,
                             connection_factory=None, dialect_name="sqlite")
+    from momyre_spark.sinks.snapshots import (
+        current_version,
+        read_manifest,
+        snapshot_read,
+    )
+
     out = str(tmp_path / "lake_users")
     eng.snapshot_to_lake("users", out, partition_by=["type"])
-    back = spark.read.parquet(out)
+    back = snapshot_read(spark, out)
     assert back.count() == 30
     assert sorted(r[0] for r in back.select("type").distinct().collect()) == \
         ["admin", "user"]
+    man = read_manifest(spark, out, current_version(spark, out))
+    assert man["partition_by"] == ["type"]
+    assert sorted(man["partitions"]) == ["type=admin", "type=user"]
 
 
 def test_reorder_columns_sql_mysql_only():

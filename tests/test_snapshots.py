@@ -288,9 +288,11 @@ def test_manifest_partition_count_guard(spark, tmp_path, monkeypatch):
 
 
 def test_cdc_stream_into_versioned_store(spark, tmp_path):
-    """Raw oplog stream -> versioned snapshot store: each micro-batch run
-    commits a version; the final table matches the in-place lake result and
-    earlier batches remain time-travelable."""
+    """Raw oplog stream -> decode -> start_cdc_lake_stream -> snapshot
+    store: each micro-batch run commits a version and earlier batches stay
+    time-travelable. The second batch carries a $set, a delete, and an
+    applyOps txn touching one key twice (seq order decides); fields an
+    insert does not carry read as NULL."""
     import json
 
     from pyspark.sql import Row
@@ -299,7 +301,10 @@ def test_cdc_stream_into_versioned_store(spark, tmp_path):
     from momyre_spark.spec import parse_spec
     from momyre_spark.streaming.pipeline import start_cdc_lake_stream
 
-    spec = parse_spec("tables:\n  users:\n    email: varchar(100)\n")
+    spec = parse_spec(
+        "tables:\n  users:\n    type: varchar(100)\n    email: varchar(100)\n"
+        "    v: varchar(100)\n"
+    )
     root = str(tmp_path / "lake")
     src = str(tmp_path / "src")
     os.makedirs(src)
@@ -316,29 +321,46 @@ def test_cdc_stream_into_versioned_store(spark, tmp_path):
             lake_root=root,
             checkpoint_dir=str(tmp_path / "ckpt"),
             trigger={"availableNow": True},
-            versioned=True,
         )
         q.awaitTermination(120)
 
     run([
         {"op": "i", "ns": "db.users", "ts": {"t": 1, "i": 1},
-         "o": {"_id": "a", "email": "a@x"}},
+         "o": {"_id": "a", "type": "admin", "email": "a@x"}},
         {"op": "i", "ns": "db.users", "ts": {"t": 1, "i": 2},
-         "o": {"_id": "b", "email": "b@x"}},
+         "o": {"_id": "b", "type": "user", "email": "b@x"}},
     ], "b1")
     run([
         {"op": "u", "ns": "db.users", "ts": {"t": 2, "i": 1},
          "o": {"$set": {"email": "a2@x"}}, "o2": {"_id": "a"}},
         {"op": "d", "ns": "db.users", "ts": {"t": 2, "i": 2}, "o": {"_id": "b"}},
+        {"op": "c", "ns": "admin.$cmd", "ts": {"t": 3, "i": 1},
+         "o": {"applyOps": [
+             {"op": "i", "ns": "db.users", "o": {"_id": "c", "v": "first"}},
+             {"op": "u", "ns": "db.users",
+              "o": {"$set": {"v": "last"}}, "o2": {"_id": "c"}},
+         ]}},
     ], "b2")
+
+    def state(version=None):
+        return {r["_id"]: (r["type"], r["email"], r["v"])
+                for r in snapshot_read(spark, tbl, version=version).collect()}
 
     tbl = f"{root}/users"
     assert current_version(spark, tbl) == 2
-    now = {r["_id"]: r["email"] for r in snapshot_read(spark, tbl).collect()}
-    assert now == {"a": "a2@x"}
-    before = {r["_id"]: r["email"]
-              for r in snapshot_read(spark, tbl, version=1).collect()}
-    assert before == {"a": "a@x", "b": "b@x"}
+    assert state() == {
+        "a": ("admin", "a2@x", None),
+        "c": (None, None, "last"),  # txn: insert then update, seq-ordered
+    }  # b deleted
+    assert state(version=1) == {
+        "a": ("admin", "a@x", None), "b": ("user", "b@x", None),
+    }
+    with pytest.raises(ValueError, match="only lake sink"):
+        start_cdc_lake_stream(
+            spark.readStream.schema("entry string").json(src), spec,
+            lake_root=root, checkpoint_dir=str(tmp_path / "ckpt2"),
+            versioned=False,
+        )
 
 
 def test_merge_replay_with_batch_id_skips_commit(spark, tmp_path):
@@ -364,8 +386,9 @@ def test_merge_replay_with_batch_id_skips_commit(spark, tmp_path):
 
 
 def test_engine_snapshot_to_lake_versioned(spark, tmp_path):
-    """engine.snapshot_to_lake(versioned=True) commits version 1; a second
-    snapshot becomes version 2 with version 1 still readable."""
+    """engine.snapshot_to_lake commits version 1; a second snapshot becomes
+    version 2 with version 1 still readable. versioned=False is refused:
+    the snapshot store is the only lake sink."""
     from momyre_spark.engine import ReplicationEngine
     from momyre_spark.spec import parse_spec
 
@@ -380,11 +403,11 @@ def test_engine_snapshot_to_lake_versioned(spark, tmp_path):
         connection_factory=None, dialect_name="sqlite",
     )
     root = str(tmp_path / "tbl")
-    eng.snapshot_to_lake("users", root, versioned=True)
+    eng.snapshot_to_lake("users", root)
     spark.createDataFrame(
         [("1", "ann2")], "_id string, name string"
     ).write.mode("overwrite").parquet(src)
-    eng.snapshot_to_lake("users", root, versioned=True)
+    eng.snapshot_to_lake("users", root)
     assert current_version(spark, root) == 2
     assert sorted(
         (r["_id"], r["name"]) for r in snapshot_read(spark, root).collect()
@@ -393,6 +416,9 @@ def test_engine_snapshot_to_lake_versioned(spark, tmp_path):
         (r["_id"], r["name"])
         for r in snapshot_read(spark, root, version=1).collect()
     ) == [("1", "ann"), ("2", "bob")]
+    with pytest.raises(ValueError, match="only lake sink"):
+        eng.snapshot_to_lake("users", root, versioned=False)
+    assert current_version(spark, root) == 2
 
 
 # ------------------------------------------------------------ compaction --
@@ -477,13 +503,17 @@ def test_compact_unpartitioned_table(spark, tmp_path):
     from momyre_spark.sinks.snapshots import snapshot_compact
 
     root = str(tmp_path / "tbl")
-    snapshot_write(spark, _df(spark, [(f"k{i}", i, "eu") for i in range(100)]).repartition(8),
+    rows = [(f"k{i}", i, "eu") for i in range(100)]
+    snapshot_write(spark, _df(spark, rows).repartition(8),
                    root, max_records_per_file=10)
     v = snapshot_compact(spark, root)
     assert v == 2
     man = read_manifest(spark, root, 2)
     assert len(_parquet_files(man, "")) == 1
-    assert len(_state(snapshot_read(spark, root))) == 100
+    assert _state(snapshot_read(spark, root)) == sorted(rows)
+    # already compact -> no-op, no version burned
+    assert snapshot_compact(spark, root) is None
+    assert current_version(spark, root) == 2
 
 
 # ------------------------------------------------------ schema evolution --
@@ -581,7 +611,7 @@ def test_engine_snapshot_records_stats_for_skipping(spark, tmp_path):
     )
     root = str(tmp_path / "tbl")
     eng.snapshot_to_lake(
-        "users", root, partition_by=["region"], versioned=True,
+        "users", root, partition_by=["region"],
         stats_cols=["val"], sort_by=["val"],
     )
     man = read_manifest(spark, root, 1)
