@@ -3,9 +3,11 @@
 Orchestration layer re-expressing the reference's ``app.Run``
 (``/root/reference/app/run.go:79-336``) on Spark:
 
-- cold start (§3.1): reconcile DDL, snapshot every table (read -> enforce
-  schema -> distributed upsert), delete orphans via anti-join, then start
-  the CDC stream from the pre-snapshot resume point;
+- cold start (§3.1): reconcile DDL, then ONE diff pass: per table, the
+  source rows full-outer-joined with the sink's keys (``sync_frame``) —
+  upserts for source rows, deletes for orphans — all tables through the
+  CDC stream's sink writer in one Spark pass (``apply_frames``); then
+  start the CDC stream from the pre-snapshot resume point;
 - partial resync (§3.3): only tables whose DDL diff marked columns for
   resync are re-snapshot; the stream resumes from the existing checkpoint
   and replays the overlap — idempotent upserts absorb it (the reference
@@ -25,21 +27,32 @@ factory + dialect.
 
 from __future__ import annotations
 
+import hashlib
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from momyre_spark.operators.antijoin import orphan_ids
+from momyre_spark.operators.cdc import frame_columns
 from momyre_spark.sinks.ddl import DDLPlan, reconcile
 from momyre_spark.sinks.dialects import DIALECTS
 from momyre_spark.sinks.jdbc_upsert import (
+    PROGRESS_TABLE,
     ConnFactory,
+    apply_actions,
     delete_dataframe,
+    ensure_progress_table,
     upsert_dataframe,
 )
 from momyre_spark.spec import Spec, enforce_schema
 
 SourceFn = Callable[[str], DataFrame]
+
+
+def _resync_key(table: str, column: str) -> str:
+    name = f"resync:{table}.{column}"  # hashed if wider than the marker column
+    return name if len(name) <= 128 else "resync:" + hashlib.md5(name.encode()).hexdigest()
 
 
 class ReplicationEngine:
@@ -100,12 +113,28 @@ class ReplicationEngine:
             conn.close()
 
     def reconcile_ddl(self) -> DDLPlan:
+        """Apply the DDL diff. The columns it marks for resync are recorded
+        in the progress table, in the DDL's transaction and before it, and
+        cleared once synced (``_resynced``); markers a crashed run left are
+        merged into the plan, so its re-run still resyncs them."""
         plan = reconcile(
             self.spec.tables, self.current_sink_schema(), self.dialect, self.force
         )
+        q = self.dialect.q
         conn = self.connection_factory()
         try:
             cur = conn.cursor()
+            ensure_progress_table(cur, self.dialect)
+            cur.execute(f"SELECT {q('name')} FROM {q(PROGRESS_TABLE)}")
+            pending = {r[0] for r in cur.fetchall()}
+            for table, tspec in self.spec.tables.items():
+                for c in tspec.ddl_columns():
+                    if _resync_key(table, c) in pending and \
+                            c not in plan.resync_columns.get(table, []):
+                        plan.mark_resync(table, c)
+            mark = self.dialect.upsert_sql(PROGRESS_TABLE, ["name", "value"], "name")
+            for table, cols in plan.resync_columns.items():
+                cur.executemany(mark, [(_resync_key(table, c), "resync") for c in cols])
             for stmt in plan.statements:
                 cur.execute(stmt)
             conn.commit()
@@ -113,8 +142,74 @@ class ReplicationEngine:
             conn.close()
         return plan
 
-    # -- snapshot (reference O1/O3, run.go:164-247) --------------------
+    def _resynced(self, resync: dict[str, list[str]]) -> None:
+        q = self.dialect.q
+        conn = self.connection_factory()
+        try:
+            conn.cursor().executemany(
+                f"DELETE FROM {q(PROGRESS_TABLE)} WHERE {q('name')} = {self.dialect.ph}",
+                [(_resync_key(t, c),) for t, cols in resync.items() for c in cols],
+            )
+            conn.commit()
+        finally:
+            conn.close()
+
+    # -- snapshot + orphan delete (reference O1/O3/J1, run.go:164-279) ---
+    def sync_frame(self, table: str, columns: list[str] | None = None) -> DataFrame:
+        """One table's action frame for the sink writer, from ONE source
+        read. Cold start (``columns=None``): the source rows full-outer-
+        joined with the sink's keys — upserts for source rows, deletes for
+        sink-only keys (the orphans). Backfill: patches of ``columns``."""
+        tspec = self.spec.tables[table]
+        src = enforce_schema(self.source(table), tspec)
+        if columns is not None:
+            return src.select(
+                F.lit(table).alias("__table"), "_id",
+                F.lit("patch").alias("__action"),
+                F.array(*[F.lit(c) for c in columns]).alias("__present"),
+                *columns,
+            )
+        src = src.withColumn("__src", F.lit(True))
+        sink = self.sink_ids(table).select(F.col("_id").alias("__sink_id"))
+        diff = src.join(sink, src["_id"] == sink["__sink_id"], "full_outer")
+        return diff.select(
+            F.lit(table).alias("__table"),
+            F.coalesce(src["_id"], sink["__sink_id"]).alias("_id"),
+            F.when(F.col("__src").isNull(), F.lit("delete"))
+            .otherwise(F.lit("upsert")).alias("__action"),
+            F.array().cast("array<string>").alias("__present"),
+            *[c for c in tspec.sql_columns if c != "_id"],
+        )
+
+    def apply_frames(self, frames: dict[str, DataFrame]) -> list:
+        """Apply several tables' ``sync_frame``s as ONE action frame, in one
+        Spark pass with one sink transaction per partition; returns the
+        writer's status rows."""
+        types = {
+            t: {c: self.spec.tables[t].sql_columns[c]
+                for c in df.columns if not c.startswith("__") and c != "_id"}
+            for t, df in frames.items()
+        }
+        names = frame_columns(types)
+        every = {names[t][c]: ty for t in types for c, ty in types[t].items()}
+        union = None
+        for t, df in frames.items():
+            own = {n: c for c, n in names[t].items()}
+            df = df.select(
+                "__table", "_id", "__action", "__present",
+                *[F.col(own[n]).alias(n) if n in own else F.lit(None).cast(ty).alias(n)
+                  for n, ty in every.items()],
+            )
+            union = df if union is None else union.unionByName(df)
+        return apply_actions(
+            union, names,
+            connection_factory=self.connection_factory,
+            dialect_name=self.dialect_name,
+            num_partitions=self.sink_partitions,
+        )
+
     def snapshot_table(self, table: str) -> None:
+        """Upsert every source row (``sync_frame`` also deletes orphans)."""
         tspec = self.spec.tables[table]
         df = enforce_schema(self.source(table), tspec)
         upsert_dataframe(
@@ -189,68 +284,53 @@ class ReplicationEngine:
                 properties=self.jdbc_properties,
                 predicates=preds,
             )
+        import pyarrow as pa
+
         conn = self.connection_factory()
         try:
             cur = conn.cursor()
             cur.execute(f"SELECT {self.dialect.q('_id')} FROM {self.dialect.q(table)}")
-            rows = [(r[0],) for r in cur.fetchall()]
+            ids = [r[0] for r in cur.fetchall()]
         finally:
             conn.close()
-        return self.spark.createDataFrame(rows or [], "`_id` string")
+        # an Arrow table becomes a JVM-side relation: no Python worker has
+        # to unpickle the ids when the frame runs
+        return self.spark.createDataFrame(pa.table({"_id": pa.array(ids, pa.string())}))
 
     # -- column-granular backfill (improvement over the reference, which
     # computes per-column resync sets but then rewrites whole rows anyway —
     # run.go:219-247) --------------------------------------------------
-    def backfill_columns(self, table: str, columns: list[str]) -> None:
+    def backfill_columns(self, table: str, columns: list[str]) -> list:
         """Patch ONLY the given columns from the source — rows written as
         partial updates, untouched columns never travel or get overwritten.
 
         At 100 TB this is the difference between re-shipping the table and
         shipping one new column."""
-        from pyspark.sql import functions as F
-
-        from momyre_spark.streaming.pipeline import patch_partition
-
-        tspec = self.spec.tables[table]
-        df = enforce_schema(self.source(table), tspec).select("_id", *columns)
-        fields = list(columns)
-        present = F.array(*[F.lit(c) for c in columns])
-        patched = df.withColumn("__present", present)
-        if self.sink_partitions:
-            patched = patched.coalesce(self.sink_partitions)
-        # close over plain locals — a lambda capturing `self` would drag the
-        # SparkSession into the task closure (unpicklable)
-        cf, dn = self.connection_factory, self.dialect_name
-        patched.foreachPartition(
-            lambda rows: patch_partition(
-                rows,
-                connection_factory=cf,
-                dialect_name=dn,
-                table=table,
-                fields=fields,
-                key="_id",
-            )
-        )
+        return self.apply_frames({table: self.sync_frame(table, columns)})
 
     # -- full run (reference §3.1/§3.3 planner) ------------------------
     def run_batch_sync(self) -> dict[str, list[str]]:
         """DDL reconcile + (full | column-granular) sync. Returns what synced.
 
-        New tables (or ``--zerop``) get a full snapshot + orphan delete;
-        existing tables with newly added/retyped columns get a
-        column-granular backfill patch."""
+        New tables (or ``--zerop``) get a full sync (snapshot + orphan
+        delete); existing tables with newly added/retyped columns get a
+        column-granular backfill patch. Every table's ``sync_frame`` goes
+        to the sink in one ``apply_frames`` pass."""
         plan = self.reconcile_ddl()
         if self.zerop:
             resync = {t: list(s.sql_columns) for t, s in self.spec.tables.items()}
         else:
             resync = plan.resync_columns
+        frames = {}
         for table, cols in resync.items():
             full = self.zerop or set(cols) >= set(
                 self.spec.tables[table].ddl_columns()
             )
-            if full:
-                self.snapshot_table(table)
-                self.delete_orphans(table, self.sink_ids(table))
-            else:
-                self.backfill_columns(table, [c for c in cols if c != "_id"])
+            frames[table] = self.sync_frame(
+                table, None if full else [c for c in cols if c != "_id"]
+            )
+        if frames:
+            self.apply_frames(frames)
+        if plan.resync_columns:
+            self._resynced(plan.resync_columns)
         return resync

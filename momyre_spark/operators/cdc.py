@@ -177,19 +177,74 @@ def merge_ops_microbatch(
     single-aggregation as :func:`apply_ops`); order-insensitive;
     replay-idempotent (same batch -> same actions).
     """
-    ops = _with_normalized_payload(ops, fields, op_col, payload_col, order)
+    actions = merge_ops_tables(
+        ops.withColumn("__ns", F.lit("t")), {"t": fields}, ns_col="__ns", key=key,
+        op_col=op_col, payload_col=payload_col, order=order, emit_seq=emit_seq,
+    )
+    return actions.drop("__table")
+
+
+def frame_columns(tables: dict[str, dict[str, str]]) -> dict[str, dict[str, str]]:
+    """Per table, sink column -> column of the :func:`merge_ops_tables`
+    frame. A field keeps its name unless tables declare it with different
+    types; then each type gets its own column ``{field}:{n}``."""
+    types: dict[str, list[str]] = {}
+    for fields in tables.values():
+        for f, t in fields.items():
+            if t not in types.setdefault(f, []):
+                types[f].append(t)
+    return {
+        name: {
+            f: f if len(types[f]) == 1 else f"{f}:{types[f].index(t)}"
+            for f, t in fields.items()
+        }
+        for name, fields in tables.items()
+    }
+
+
+def merge_ops_tables(
+    ops: DataFrame,
+    tables: dict[str, dict[str, str]],
+    *,
+    ns_col: str = "ns",
+    key: str = "_id",
+    op_col: str = "op",
+    payload_col: str = "payload",
+    order: Sequence[str] = ("ts",),
+    emit_seq: bool = False,
+    partitions: int | None = None,
+) -> DataFrame:
+    """:func:`merge_ops_microbatch` for every table of ``tables`` (name ->
+    declared fields) in ONE aggregation by ``(ns_col, key)``; ops of other
+    namespaces are dropped. Each table's fields are cast to its own
+    declared types. Output: ``__table``, then merge_ops_microbatch's
+    columns, named by :func:`frame_columns`. ``partitions`` hash-partitions
+    the ops by ``(ns_col, key)`` into exactly that many partitions first,
+    so the output layout is fixed (adaptive execution does not coalesce
+    it) and replay markers can be keyed on it."""
+    names = frame_columns(tables)
+    # payload field -> {frame column: (declared type, tables declaring it)}
+    outs: dict[str, dict[str, tuple[str, list[str]]]] = {}
+    for tname, fields in tables.items():
+        for f, t in fields.items():
+            outs.setdefault(f, {}).setdefault(names[tname][f], (t, []))[1].append(tname)
+    ops = ops.filter(F.col(ns_col).isin(list(tables)))
+    if partitions:
+        ops = ops.repartition(partitions, ns_col, key)
+    ops = _with_normalized_payload(ops, outs, op_col, payload_col, order)
 
     field_aggs = []
-    for f, t in fields.items():
+    for f, cols in outs.items():
         mentioned = F.map_contains_key(F.col(payload_col), F.lit(f))
-        field_aggs.append(
-            F.max_by(
-                F.element_at(F.col(payload_col), F.lit(f)),
-                F.when(mentioned, F.col("__seq")),
-            )
-            .cast(t)
-            .alias(f)
+        value = F.max_by(
+            F.element_at(F.col(payload_col), F.lit(f)),
+            F.when(mentioned, F.col("__seq")),
         )
+        # cast only for the tables declaring this type
+        field_aggs += [
+            F.when(F.col(ns_col).isin(owners), value.cast(t)).alias(c)
+            for c, (t, owners) in cols.items()
+        ]
         field_aggs.append(F.max(mentioned).alias(f"__has_{f}"))
     reset_op = F.max_by(
         F.col(op_col), F.when(F.col(op_col).isin(INSERT, DELETE), F.col("__seq"))
@@ -199,7 +254,7 @@ def merge_ops_microbatch(
         # per-key high-water mark of the primary sequence column — the
         # monotonic guard for out-of-order cross-batch delivery
         extra.append(F.max(F.col(order[0])).cast("long").alias("__ts"))
-    merged = ops.groupBy(key).agg(reset_op, *field_aggs, *extra)
+    merged = ops.groupBy(ns_col, key).agg(reset_op, *field_aggs, *extra)
 
     # Action per key: delete keys emit only the key (updates after a delete
     # are no-ops — an UPDATE matching 0 rows in the reference); insert-reset
@@ -213,13 +268,14 @@ def merge_ops_microbatch(
         F.array(
             *[
                 F.when(F.col(f"__has_{f}"), F.lit(f)).otherwise(F.lit(None))
-                for f in fields
+                for f in outs
             ]
         ),
         lambda x: x.isNotNull(),
     )
     is_delete = F.col("__action") == DELETE
     return merged.withColumn("__action", action).select(
+        F.col(ns_col).alias("__table"),
         key,
         "__action",
         F.when(is_delete, F.array().cast("array<string>"))
@@ -227,7 +283,8 @@ def merge_ops_microbatch(
         .alias("__present"),
         *([F.col("__ts")] if emit_seq else []),
         *[
-            F.when(is_delete, F.lit(None).cast(t)).otherwise(F.col(f)).alias(f)
-            for f, t in fields.items()
+            F.when(is_delete, F.lit(None).cast(t)).otherwise(F.col(c)).alias(c)
+            for cols in outs.values()
+            for c, (t, _) in cols.items()
         ],
     )

@@ -15,10 +15,27 @@ right default on a 1000-executor cluster reading ~100 TB:
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
 DEFAULT_APP_NAME = "momyre-spark"
+
+
+def driver_memory(meminfo: str | None = None) -> str:
+    """Default ``spark.driver.memory``: half the host's ``MemTotal`` (from
+    ``meminfo``, else ``/proc/meminfo``), at least 1g and at most 48g; 48g
+    when the total cannot be read."""
+    if meminfo is None:
+        try:
+            with open("/proc/meminfo") as f:
+                meminfo = f.read()
+        except OSError:
+            meminfo = ""
+    m = re.search(r"^MemTotal:\s+(\d+)\s*kB", meminfo, re.MULTILINE)
+    if not m:
+        return "48g"
+    return f"{max(1024, min(int(m.group(1)) // 2048, 48 * 1024))}m"
 
 
 def default_parallelism() -> int:
@@ -100,12 +117,12 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
         # local[N] runs driver AND all N executor threads in ONE JVM: size the
-        # heap for the executor side, not a remote driver's. 8g starves 32
-        # task threads (GC dominates mid-benchmark once cached frames from
-        # LSH/curate persist()s accumulate); the harness box has 128 GiB.
-        # On a real cluster this knob is irrelevant — executors get their own
-        # spark.executor.memory.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        # heap for the executor side, not a remote driver's — but to the
+        # host (driver_memory), leaving the rest to the Python workers and
+        # the OS. On a real cluster this knob is irrelevant — executors get
+        # their own spark.executor.memory.
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM") or driver_memory())
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

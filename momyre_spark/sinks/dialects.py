@@ -58,6 +58,9 @@ class Dialect:
             f"AND {self.q(ts_col)} <= {self.ph}"
         )
 
+    # concurrent writer transactions the sink takes (None: no cap)
+    max_writers = None
+
     # two-arg least/greatest spelling (sqlite scalar MIN/MAX; others
     # LEAST/GREATEST)
     least_fn = "MIN"
@@ -72,7 +75,7 @@ class Dialect:
         maintained aggregate table with one statement per row — the
         sink-side half of operators/incremental.py. NOT idempotent ('sum'
         double-applies on replay) — callers must pair it with the in-txn
-        batch progress marker, which is exactly what merge_upsert_partition
+        batch progress marker, which is exactly what merge_upsert_dataframe
         does."""
         t, e = self.q(table), "excluded"
 
@@ -99,12 +102,7 @@ class Dialect:
         )
 
     def delete_sql(self, table: str, key: str) -> str:
-        return f"DELETE FROM {self.q(table)} WHERE {self.q(key)} = ?"
-
-    def insert_sql(self, table: str, columns: list[str]) -> str:
-        cols = ", ".join(self.q(c) for c in columns)
-        ph = ", ".join("?" for _ in columns)
-        return f"INSERT INTO {self.q(table)} ({cols}) VALUES ({ph})"
+        return f"DELETE FROM {self.q(table)} WHERE {self.q(key)} = {self.ph}"
 
     # -------------------------------------------- staged two-phase merge --
     # Combining merges (sum) are NOT idempotent, and per-partition replay
@@ -269,14 +267,6 @@ class MySQLDialect(Dialect):
             f"ON DUPLICATE KEY UPDATE {sets}"
         )
 
-    def delete_sql(self, table: str, key: str) -> str:
-        return f"DELETE FROM {self.q(table)} WHERE {self.q(key)} = %s"
-
-    def insert_sql(self, table: str, columns: list[str]) -> str:
-        cols = ", ".join(self.q(c) for c in columns)
-        ph = ", ".join("%s" for _ in columns)
-        return f"INSERT INTO {self.q(table)} ({cols}) VALUES ({ph})"
-
     def upsert_sql_multi(
         self, table: str, columns: list[str], keys: list[str]
     ) -> str:
@@ -327,7 +317,11 @@ class MySQLDialect(Dialect):
 
 
 class SQLiteDialect(Dialect):
-    """sqlite: INSERT ... ON CONFLICT(key) DO UPDATE (test stand-in)."""
+    """sqlite: INSERT ... ON CONFLICT(key) DO UPDATE (test stand-in). One
+    file has one writer at a time; more transactions only queue on its
+    lock."""
+
+    max_writers = 1
 
     def __init__(self) -> None:
         super().__init__(name="sqlite", quote_char='"')
@@ -368,14 +362,6 @@ class PostgresDialect(Dialect):
             f"INSERT INTO {self.q(table)} ({cols}) VALUES ({ph}) "
             f"ON CONFLICT ({self.q(key)}) DO UPDATE SET {sets}"
         )
-
-    def delete_sql(self, table: str, key: str) -> str:
-        return f"DELETE FROM {self.q(table)} WHERE {self.q(key)} = %s"
-
-    def insert_sql(self, table: str, columns: list[str]) -> str:
-        cols = ", ".join(self.q(c) for c in columns)
-        ph = ", ".join("%s" for _ in columns)
-        return f"INSERT INTO {self.q(table)} ({cols}) VALUES ({ph})"
 
 
 DIALECTS: dict[str, Dialect] = {

@@ -4,17 +4,32 @@ The reference's steady state is: tailable oplog cursor -> decode -> one MySQL
 txn per entry, sequential (``run.go:297-335``). Here the same contract is a
 Structured Streaming query:
 
-    ops stream -> foreachBatch:
-        per table: merge_ops_microbatch (one shuffle, final action per key)
-        -> apply to the sink: upserts (whole rows), patches (present fields
-           only), deletes — each partition one transaction, with the batch id
-           recorded in-txn (sinks/jdbc_upsert.py) for exactly-once apply.
+    ops stream -> foreachBatch (apply_ops_microbatch):
+        every table's ops in ONE shuffle by (ns, _id)
+        (operators/cdc.merge_ops_tables: one final action per key)
+        -> ONE writer pass (sinks/jdbc_upsert.apply_actions): each partition
+           applies its upserts (whole rows), patches (present fields only)
+           and deletes, for every table, in one transaction that also
+           records the batch id — exactly-once apply.
 
 Ordering: the reference relies on a single sequential applier; the engine
 instead collapses each batch to one action per key *before* writing (order-
 insensitive within the batch), and Structured Streaming guarantees batch
 serialization — batch N+1 never starts before N commits. Replay after crash
 re-delivers a completed batch; the in-txn progress marker makes that a no-op.
+
+Sequence guard (``ts_guard_col``): the action frame carries ``__ts``, the
+per-key high-water mark, and the sink table a matching column that guards
+every write, so stale UPDATES/UPSERTS are no-ops under OUT-OF-ORDER
+cross-batch delivery (reordered Kafka partitions, replayed ranges) — a
+failure the reference's totally-ordered oplog never had. A guarded DELETE
+removes the row *and its high-water mark*, so a stale upsert after it
+re-inserts the row; ``tombstone_col`` (requires ``ts_guard_col``) closes
+that window: deletes become guarded soft-delete upserts that keep the key
+and mark with ``tombstone_col = 1`` (upserts write 0). Readers filter
+``tombstone_col = 0``; ``sinks.jdbc_upsert.purge_tombstones`` compacts.
+Without it, transports that can reorder a delete before an older upsert
+should keep per-key order (Kafka key-partitioning does).
 
 The ops-stream source is any DataFrame stream with columns
 (ts, ns, op, _id, payload) plus an optional ``seq`` tie-breaker (emitted by
@@ -32,201 +47,21 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from momyre_spark.operators.cdc import merge_ops_microbatch
-from momyre_spark.sinks.dialects import DIALECTS, check_ident
-from momyre_spark.sinks.jdbc_upsert import (
-    ConnFactory,
-    _progress_key,
-    _write_progress_in_tx,
-    delete_dataframe,
-    ensure_progress_table,
-    read_progress,
-    upsert_dataframe,
-)
+from momyre_spark.operators.cdc import frame_columns, merge_ops_microbatch, merge_ops_tables
+from momyre_spark.sinks.dialects import DIALECTS
+from momyre_spark.sinks.jdbc_upsert import ConnFactory, apply_actions
+# noqa F401: not called here, but perfbench/replication.py wraps these by name
+from momyre_spark.sinks.jdbc_upsert import delete_dataframe, upsert_dataframe  # noqa: F401
 from momyre_spark.spec import Spec, TableSpec
 
 
-def patch_partition(
-    rows,
-    *,
-    connection_factory: ConnFactory,
-    dialect_name: str,
-    table: str,
-    fields: list[str],
-    key: str,
-    batch_id: int | None = None,
-    ts_guard_col: str | None = None,
-    layout: int | None = None,
-) -> None:
-    """Executor-side partial-update apply (reference K4, mysql.go:449-505).
-
-    Rows carry ``__present`` (fields the patch sets). Rows are grouped by
-    their present-set so each distinct shape becomes one prepared statement
-    executed with executemany — batched, unlike the reference's
-    per-row statements. ``layout`` (total partition count) keys the replay
-    marker so a changed partition layout reapplies instead of skipping."""
-    dialect = DIALECTS[dialect_name]
-    check_ident(table)
-    ph = dialect.ph
-    try:
-        from pyspark import TaskContext
-
-        tc = TaskContext.get()
-        part = tc.partitionId() if tc is not None else None
-    except Exception:
-        part = None
-    pkey = _progress_key(f"{table}#patch", part, layout)
-    conn = connection_factory()
-    try:
-        cur = conn.cursor()
-        ensure_progress_table(cur, dialect)
-        if batch_id is not None:
-            seen = read_progress(cur, dialect, pkey, ph)
-            if seen is not None and seen >= batch_id:
-                return
-        groups: dict[tuple[str, ...], list[tuple]] = {}
-        for row in rows:
-            present = tuple(f for f in fields if f in set(row["__present"]))
-            if not present:
-                continue  # no-op patch (mysql.go:478-480: empty SET skipped)
-            args = tuple(row[f] for f in present)
-            if ts_guard_col is not None:
-                args += (row["__ts"], row[key], row["__ts"])
-            else:
-                args += (row[key],)
-            groups.setdefault(present, []).append(args)
-        for present, args in groups.items():
-            sets = ", ".join(f"{dialect.q(c)} = {ph}" for c in present)
-            if ts_guard_col is not None:
-                sql = (
-                    f"UPDATE {dialect.q(table)} SET {sets}, "
-                    f"{dialect.q(ts_guard_col)} = {ph} "
-                    f"WHERE {dialect.q(key)} = {ph} "
-                    f"AND {dialect.q(ts_guard_col)} <= {ph}"
-                )
-            else:
-                sql = (
-                    f"UPDATE {dialect.q(table)} SET {sets} "
-                    f"WHERE {dialect.q(key)} = {ph}"
-                )
-            cur.executemany(sql, args)
-        if batch_id is not None:
-            _write_progress_in_tx(cur, dialect, pkey, batch_id)
-        conn.commit()
-    except Exception:
-        conn.rollback()
-        raise
-    finally:
-        conn.close()
-
-
-def apply_actions(
-    actions: DataFrame,
-    table: TableSpec,
-    *,
-    connection_factory: ConnFactory,
-    dialect_name: str,
-    batch_id: int | None = None,
-    key: str = "_id",
-    num_partitions: int | None = None,
-    ts_guard_col: str | None = None,
-    tombstone_col: str | None = None,
-) -> None:
-    """Write a merge_ops_microbatch action frame to the sink.
-
-    With ``ts_guard_col`` the actions frame must carry ``__ts`` (from
-    ``merge_ops_microbatch(emit_seq=True)``) and the sink table a matching
-    sequence column: every write is then guarded by the per-key high-water
-    mark, making stale UPDATES/UPSERTS no-ops under OUT-OF-ORDER cross-batch
-    delivery (reordered Kafka partitions, replayed ranges) — a failure mode
-    the reference's totally-ordered oplog could never produce.
-
-    RESURRECTION WINDOW and ``tombstone_col``: a guarded DELETE physically
-    removes the row *and therefore its high-water mark*; a stale upsert
-    arriving after that delete finds no row to compare against and
-    re-inserts it. Passing ``tombstone_col`` (requires ``ts_guard_col``)
-    closes the window: deletes become guarded soft-delete upserts that keep
-    the key + high-water mark with ``tombstone_col = 1``, upserts write
-    ``tombstone_col = 0``, and a stale upsert after a newer delete is
-    correctly rejected by the guard. Readers must filter
-    ``tombstone_col = 0``; compact flagged rows later with
-    ``sinks.jdbc_upsert.purge_tombstones``. Without ``tombstone_col``,
-    deployments whose transport can reorder a delete before an older upsert
-    should keep per-key ordering in the transport (Kafka key-partitioning
-    does)."""
-    if tombstone_col is not None and ts_guard_col is None:
-        raise ValueError("tombstone_col requires ts_guard_col")
-    fields = [c for c in table.sql_columns if c != key]
-    guard_cols = ["__ts"] if ts_guard_col else []
-    upsert_sel = [key, *fields] + (
-        [F.col("__ts").alias(ts_guard_col)] if ts_guard_col else []
-    )
-    if tombstone_col is not None:
-        upsert_sel.append(F.lit(0).alias(tombstone_col))
-    upserts = actions.filter(F.col("__action") == "upsert").select(*upsert_sel)
-    patches = actions.filter(F.col("__action") == "patch").select(
-        key, "__present", *guard_cols, *fields
-    )
-    deletes = actions.filter(F.col("__action") == "delete").select(
-        key, *guard_cols
-    )
-
-    upsert_dataframe(
-        upserts,
-        connection_factory=connection_factory,
-        dialect_name=dialect_name,
-        table=table.name,
-        key=key,
-        batch_id=batch_id,
-        num_partitions=num_partitions,
-        ts_guard_col=ts_guard_col,
-    )
-    if num_partitions:
-        patches = patches.coalesce(num_partitions)
-    patch_rdd = patches.rdd
-    patch_layout = patch_rdd.getNumPartitions()
-    patch_rdd.foreachPartition(
-        lambda rows: patch_partition(
-            rows,
-            connection_factory=connection_factory,
-            dialect_name=dialect_name,
-            table=table.name,
-            fields=fields,
-            key=key,
-            batch_id=batch_id,
-            ts_guard_col=ts_guard_col,
-            layout=patch_layout,
-        )
-    )
-    if tombstone_col is not None:
-        # soft delete: a guarded upsert that keeps the key + high-water mark
-        # with the tombstone flag set — closes the resurrection window
-        tombstones = deletes.select(
-            key,
-            F.col("__ts").alias(ts_guard_col),
-            F.lit(1).alias(tombstone_col),
-        )
-        upsert_dataframe(
-            tombstones,
-            connection_factory=connection_factory,
-            dialect_name=dialect_name,
-            table=table.name,
-            key=key,
-            batch_id=batch_id,
-            num_partitions=num_partitions,
-            ts_guard_col=ts_guard_col,
-            progress_label=f"{table.name}#tombstone",
-        )
-    else:
-        delete_dataframe(
-            deletes,
-            connection_factory=connection_factory,
-            dialect_name=dialect_name,
-            table=table.name,
-            key=key,
-            num_partitions=num_partitions,
-            ts_guard_col=ts_guard_col,
-        )
+def _default_order(columns: Sequence[str]) -> tuple[str, ...]:
+    """The tie-breakers the IR carries: ``seq`` (txn-unwrap array position,
+    sources/opslog.py C8 — inner applyOps ops share the outer ts) and
+    ``tok`` (connector resume token, sources/mongo.py — txn events share one
+    clusterTime), giving ``("ts", "seq", "tok")`` / ``("ts", "seq")`` /
+    ``("ts",)``."""
+    return tuple(c for c in ("ts", "seq", "tok") if c in columns)
 
 
 def _merge_per_table(
@@ -240,21 +75,16 @@ def _merge_per_table(
 ) -> None:
     """Route one micro-batch of ops by namespace, merge each table's ops to
     one action per key, and hand ``apply(table_spec, fields, actions)`` the
-    result — the routing both CDC streams (sink and lake) share.
+    result — the lake stream's routing.
 
     The batch is persisted for the duration of the apply: each table's
     branch filters the same frame, and without the persist a 10-table spec
     would re-read/re-decode the micro-batch 10 times.
 
-    ``order=None`` (default) auto-selects the tie-breakers the IR carries:
-    ``seq`` (txn-unwrap array position, sources/opslog.py C8 — inner
-    applyOps ops share the outer ts) and ``tok`` (connector resume token,
-    sources/mongo.py — txn events share one clusterTime), giving
-    ``("ts", "seq", "tok")`` / ``("ts", "seq")`` / ``("ts",)``."""
+    ``order=None`` (default) auto-selects the tie-breakers (see
+    :func:`_default_order`)."""
     if order is None:
-        order = tuple(
-            c for c in ("ts", "seq", "tok") if c in batch_df.columns
-        )
+        order = _default_order(batch_df.columns)
     multi_table = len(spec.tables) > 1
     if multi_table:
         batch_df = batch_df.persist()
@@ -283,25 +113,36 @@ def apply_ops_microbatch(
     num_partitions: int | None = None,
     ts_guard_col: str | None = None,
     tombstone_col: str | None = None,
-) -> None:
-    """foreachBatch body of the sink stream: ``_merge_per_table`` routing,
-    then ``apply_actions`` per table."""
-
-    def apply(tspec: TableSpec, _fields, actions: DataFrame) -> None:
-        apply_actions(
-            actions,
-            tspec,
-            connection_factory=connection_factory,
-            dialect_name=dialect_name,
-            batch_id=batch_id,
-            num_partitions=num_partitions,
-            ts_guard_col=ts_guard_col,
-            tombstone_col=tombstone_col,
-        )
-
-    _merge_per_table(
-        batch_df, spec, apply, order=order, ns_col=ns_col,
-        emit_seq=ts_guard_col is not None,
+) -> list:
+    """foreachBatch body of the sink stream: every table's ops merged in one
+    shuffle, hash-partitioned into the writer's partitions
+    (``num_partitions``, else the dialect's cap — one for sqlite, whose
+    writers only queue on its file lock — else the shuffle partitions),
+    then applied by one ``apply_actions`` pass, one transaction per
+    partition. Returns its status rows.
+    ``order=None`` auto-selects the tie-breakers (:func:`_default_order`);
+    ``ts_guard_col``/``tombstone_col``: see the module docstring."""
+    tables = {
+        name: {c: t for c, t in tspec.sql_columns.items() if c != "_id"}
+        for name, tspec in spec.tables.items()
+    }
+    n = (num_partitions or DIALECTS[dialect_name].max_writers
+         or int(batch_df.sparkSession.conf.get("spark.sql.shuffle.partitions")))
+    actions = merge_ops_tables(
+        batch_df, tables, ns_col=ns_col,
+        order=order or _default_order(batch_df.columns),
+        emit_seq=ts_guard_col is not None, partitions=n,
+    )
+    return apply_actions(
+        actions,
+        frame_columns(tables),
+        connection_factory=connection_factory,
+        dialect_name=dialect_name,
+        batch_id=batch_id,
+        num_partitions=n,
+        layout=n,
+        ts_guard_col=ts_guard_col,
+        tombstone_col=tombstone_col,
     )
 
 
@@ -323,8 +164,8 @@ def start_cdc_stream(
     The Structured Streaming checkpoint dir replaces the reference's
     ``momyre.timestamp`` resume token (S4/K6) for source offsets; the
     per-batch progress markers in the sink give exactly-once apply.
-    ``ts_guard_col``/``tombstone_col``: see apply_actions — sequence-guarded
-    writes and soft deletes for out-of-order transports."""
+    ``ts_guard_col``/``tombstone_col``: see the module docstring —
+    sequence-guarded writes and soft deletes for out-of-order transports."""
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         apply_ops_microbatch(
